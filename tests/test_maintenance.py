@@ -55,7 +55,7 @@ def test_compaction_preserves_rows_and_shrinks_files(
     n_files = compact_bronze_partition(
         spark, fragmented_bronze, "2024-01-15"
     )
-    assert n_files == 1  # well under target_rows_per_file
+    assert n_files == 1  # well under TARGET_ROWS_PER_FILE
 
     after_files = len(glob.glob(part_glob))
     assert after_files == 1

@@ -23,7 +23,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .functions import (
     clean_salary_bounds_from,
@@ -36,6 +36,7 @@ from .functions import (
 )
 from .operators.incremental import newer_than
 from .schemas import JOBS
+from .sources.ingest import file_count
 from .sources.state import advance_watermark, read_last_processed_time
 
 
@@ -107,6 +108,9 @@ def run_batch(
 
     Order of operations is the B4 fix: filter -> clean -> transform ->
     dedup vs silver -> write silver -> only then advance the watermark.
+    The append writes ``file_count(n, cores)`` files, sized by the row
+    count ``n`` that the F6 gate computes anyway: one file for a daily
+    batch, up to one per core for a large one.
     """
     wm = read_last_processed_time(state_path)
     fresh = bronze.filter(newer_than("posted_date", wm))
@@ -159,10 +163,9 @@ def run_batch(
         # stay: the F6 empty-batch GATE needs its count before deciding
         # to write at all, and B4 ordering needs mx before the state
         # move; rows_written cross-checks it after the fact).
-        from pyspark.sql import Observation  # noqa: PLC0415
-
         obs = Observation("silver_write")
-        observed = cleaned.observe(
+        cores = spark.sparkContext.defaultParallelism
+        observed = cleaned.coalesce(file_count(stats["n"], cores)).observe(
             obs,
             F.count(F.lit(1)).alias("rows_written"),
             F.sum(
@@ -271,7 +274,11 @@ def refresh_remaining_time(
 
     Scale: one scan, one write, zero shuffles - the render is a pure
     projected expression, so the job is map-only and the rewrite
-    parallelizes at the file level. Returns the row count rewritten.
+    parallelizes at the file level: one output file per scan split
+    (Spark packs small files into one split). The input row count comes
+    from an ``Observation`` on that write rather than a second scan;
+    the re-read count of the temp dir validates it before the swap.
+    Returns the row count rewritten.
     """
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
@@ -296,15 +303,18 @@ def refresh_remaining_time(
         shutil.rmtree(leftover, ignore_errors=True)
 
     silver = spark.read.schema(JOBS).parquet(silver_path)
+    obs = Observation("refresh")
     refreshed = silver.withColumn(
         "remaining_time",
         render_remaining_time(
             F.unix_micros(F.col("due_date")), F.lit(now_us)
         ),
     ).select(*[f.name for f in JOBS.fields])
-    refreshed.write.mode("overwrite").parquet(tmp_path)
+    refreshed.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(tmp_path)
 
-    n_in = silver.count()
+    n_in = obs.get["rows"]
     n_out = spark.read.schema(JOBS).parquet(tmp_path).count()
     if n_out != n_in:
         shutil.rmtree(tmp_path, ignore_errors=True)

@@ -1776,15 +1776,19 @@ _AP_SUP_NUM, _AP_SUP_DEN = 57, 100
 #: postings on doc_id - two corpus-keyed shuffle joins for the triple
 #: stage - where a sorted array of <= _AP_VOCAB distinct terms per doc
 #: can enumerate the identical (t1 < t2 < t3) combinations inside the
-#: scan task. Enumeration runs as CHAINED Generate operators
-#: (posexplode + slice, optimization r15, guide section 4.1): the r14
-#: flatten(transform(... slice ...)) higher-order lambdas evaluated on
-#: the interpreted path and allocated a struct array per row - the
-#: same expression class q362 removed - where explode-of-slice is
-#: whole-stage codegen with no struct allocation. posexplode's index
-#: is 0-based and slice() is 1-based, so elements strictly after
-#: position i start at i + 2 (and after the pair (i, i+1+j) at
-#: i + j + 3).
+#: scan task. transform's lambda index is 0-based and slice() is
+#: 1-based, so elements strictly after position i start at i + 2.
+_AP_PAIRS_SQL = (
+    "flatten(transform(ts, (x, i) ->"
+    " transform(slice(ts, i + 2, size(ts)),"
+    " y -> struct(x AS t1, y AS t2))))"
+)
+_AP_TRIPLES_SQL = (
+    "flatten(transform(ts, (x, i) ->"
+    " flatten(transform(slice(ts, i + 2, size(ts)), (y, j) ->"
+    " transform(slice(ts, i + j + 3, size(ts)),"
+    " z -> struct(x AS t1, y AS t2, z AS t3))))))"
+)
 
 
 def _ap_doc_term_arrays(spark, sf_dir):
@@ -1830,12 +1834,12 @@ def _ap_doc_term_arrays(spark, sf_dir):
     arr = transient_persist(
         per_doc.crossJoin(F.broadcast(topset)).select(
             "doc_id",
-            # array_intersect, not filter(x -> array_contains(...)):
-            # same membership restriction (tset is already distinct,
-            # so the intersect drops nothing else) on the codegen
-            # path instead of an interpreted per-element lambda (r15,
-            # guide section 4.1).
-            F.sort_array(F.array_intersect("tset", "_top")).alias("ts"),
+            F.sort_array(
+                F.filter(
+                    F.col("tset"),
+                    lambda term: F.array_contains(F.col("_top"), term),
+                )
+            ).alias("ts"),
         )
     )
     ms = docs.agg(
@@ -1927,13 +1931,8 @@ def q358_apriori_triples(spark, sf_dir):
     """
     arr, ms = _ap_doc_term_arrays(spark, sf_dir)
     fp = transient_persist(
-        arr.select("ts", F.posexplode("ts").alias("_i", "t1"))
-        .select(
-            "t1",
-            F.explode(
-                F.slice("ts", F.col("_i") + F.lit(2), F.size("ts"))
-            ).alias("t2"),
-        )
+        arr.select(F.explode(F.expr(_AP_PAIRS_SQL)).alias("p"))
+        .select("p.t1", "p.t2")
         .groupBy("t1", "t2")
         .agg(F.count("*").cast("long").alias("sup"))
         .crossJoin(F.broadcast(ms.select("minsup")))
@@ -1954,30 +1953,14 @@ def q358_apriori_triples(spark, sf_dir):
     )
     tri = (
         arr.crossJoin(F.broadcast(fpt))
-        # array_intersect keeps ts's sort order and drops nothing
-        # else (ts is distinct): the codegen form of the restriction
-        # (see _ap_doc_term_arrays).
-        .select(F.array_intersect("ts", "_fpt").alias("ts"))
-        .select("ts", F.posexplode("ts").alias("_i", "t1"))
         .select(
-            "ts",
-            F.col("_i"),
-            "t1",
-            F.posexplode(
-                F.slice("ts", F.col("_i") + F.lit(2), F.size("ts"))
-            ).alias("_j", "t2"),
+            F.filter(
+                F.col("ts"),
+                lambda term: F.array_contains(F.col("_fpt"), term),
+            ).alias("ts")
         )
-        .select(
-            "t1",
-            "t2",
-            F.explode(
-                F.slice(
-                    "ts",
-                    F.col("_i") + F.col("_j") + F.lit(3),
-                    F.size("ts"),
-                )
-            ).alias("t3"),
-        )
+        .select(F.explode(F.expr(_AP_TRIPLES_SQL)).alias("p"))
+        .select("p.t1", "p.t2", "p.t3")
         .join(F.broadcast(fp), ["t1", "t2"], "left_semi")
         .join(
             F.broadcast(fp.select(F.col("t1"), F.col("t2").alias("t3"))),

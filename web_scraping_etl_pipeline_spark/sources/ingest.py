@@ -8,6 +8,16 @@ as one distributed, typed write - no per-row INSERTs, no rendered SQL
 (fixes SURVEY.md section 8 B5: the reference's f-string INSERTs are
 injectable / quote-broken).
 
+Landing goes through Arrow: the batch is checked and typed in the
+calling process into a ``pyarrow.Table`` that the JVM reads directly,
+so a landing starts no Python workers (a list of dicts would be
+pickled through a Python-RDD map). Every batch write sizes its output by one
+rule, :func:`file_count`: one file per ``MIN_ROWS_PER_TASK`` rows up to
+one per core, and more only when a file would pass
+``TARGET_ROWS_PER_FILE`` rows. A daily batch of a few hundred rows lands
+as one file instead of one per core; a large batch keeps one file, and
+so one scan task downstream, per core.
+
 At 100 TB the batch arrives as files in a landing zone; both paths land
 in the same partitioned bronze layout, so everything downstream is
 identical.
@@ -15,12 +25,44 @@ identical.
 
 from __future__ import annotations
 
+import datetime as dt
 from collections.abc import Iterable, Mapping
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..schemas import JOBS_RAW
+
+#: most rows in one output file. Landing, the silver append and bronze
+#: compaction all size their writes with :func:`file_count`.
+TARGET_ROWS_PER_FILE = 1_000_000
+
+#: fewest rows a batch write gives each of its files (and so each scan
+#: task downstream) when it spreads a batch over the cores. A file under
+#: 128 MB is one parquet row group, which a scan cannot split. On a 4-core
+#: host, ``run_batch`` over a first batch written as one file vs four
+#: took 0.48/0.53 s at 500 rows, 0.51/0.53 s at 5,000, 0.62/0.54 s at
+#: 10,000 and 3.37/2.23 s at 200,000.
+MIN_ROWS_PER_TASK = 5_000
+
+#: JOBS_RAW column type -> (accepted Python type, Arrow type). Checked
+#: by hand: Arrow alone takes bytes for a string and an int for a
+#: timestamp.
+_ARROW_TYPES = {
+    T.StringType(): (str, pa.string()),
+    T.TimestampType(): (dt.datetime, pa.timestamp("us", tz="UTC")),
+}
+
+
+def file_count(rows: int, cores: int = 1) -> int:
+    """Output files for a write of ``rows`` rows on ``cores`` cores: one
+    per ``MIN_ROWS_PER_TASK`` rows but at most one per core, unless
+    ``ceil(rows / TARGET_ROWS_PER_FILE)`` is more; at least one. With
+    one core (compaction) it is just the ceiling."""
+    per_task = min(cores, -(-rows // MIN_ROWS_PER_TASK))
+    return max(1, per_task, -(-rows // TARGET_ROWS_PER_FILE))
 
 
 def batch_to_df(
@@ -28,12 +70,38 @@ def batch_to_df(
 ) -> DataFrame:
     """A scraped batch (list of dicts, the reference's in-memory shape,
     topcv_pipeline.py:76-86) -> typed DataFrame with the canonical
-    bronze schema."""
-    rows = [
-        {name: rec.get(name) for name in JOBS_RAW.fieldNames()}
-        for rec in records
-    ]
-    return spark.createDataFrame(rows, schema=JOBS_RAW)
+    bronze schema, in ``file_count(len(records), cores)`` partitions.
+
+    The records become a ``pyarrow.Table`` built against ``JOBS_RAW``
+    in this process, so no Spark job and no Python worker is needed to
+    land them. Checks run before Spark sees the batch: a missing key is
+    NULL, a NULL ``job_link`` raises ValueError and a value of the
+    wrong type raises TypeError (where ``createDataFrame`` of a list
+    would store ``str(value)`` in a string column). Timestamps keep
+    ``createDataFrame``'s reading (``TimestampType.toInternal``): a
+    naive datetime is process-local time, an aware one is its
+    instant."""
+    records = list(records)
+    columns = []
+    for field in JOBS_RAW.fields:
+        py_type, arrow_type = _ARROW_TYPES[field.dataType]
+        values = [rec.get(field.name) for rec in records]
+        for value in values:
+            if value is None:
+                if not field.nullable:
+                    raise ValueError(f"batch_to_df: {field.name} is NULL")
+            elif not isinstance(value, py_type):
+                raise TypeError(
+                    f"batch_to_df: {field.name} must be {py_type.__name__}, "
+                    f"got {type(value).__name__}"
+                )
+        if isinstance(field.dataType, T.TimestampType):
+            values = [field.dataType.toInternal(v) for v in values]
+        columns.append(pa.array(values, type=arrow_type))
+    table = pa.Table.from_arrays(columns, names=JOBS_RAW.fieldNames())
+    df = spark.createDataFrame(table, schema=JOBS_RAW)
+    cores = spark.sparkContext.defaultParallelism
+    return df.coalesce(file_count(len(records), cores))
 
 
 def read_landing(
@@ -80,7 +148,8 @@ def write_bronze(df: DataFrame, bronze_path: str, ingest_date: str) -> None:
     """S2: append the raw batch to bronze, partitioned by ingest date so
     the incremental scan prunes partitions instead of re-reading history
     (SURVEY.md section 4 - the design choice that replaces the reference's
-    hand-rolled watermark pushdown at scale)."""
+    hand-rolled watermark pushdown at scale). One file per partition of
+    ``df``: a frame from :func:`batch_to_df` is already sized."""
     (
         df.withColumn("ingest_date", F.lit(ingest_date))
         .write.mode("append")
@@ -130,11 +199,10 @@ def compact_bronze_partition(
     spark: SparkSession,
     bronze_path: str,
     ingest_date: str,
-    target_rows_per_file: int = 1_000_000,
 ) -> int:
     """Small-file compaction for one bronze partition: rewrite the
     partition's many appended files (one per micro-batch/task) into
-    ``ceil(rows / target_rows_per_file)`` files, preserving every row.
+    ``file_count(rows)`` files, preserving every row.
 
     Why it exists: a daily-append bronze accumulates files at the rate
     of batches x tasks; at 100 TB a year of appends is millions of
@@ -172,7 +240,7 @@ def compact_bronze_partition(
             shutil.rmtree(leftover)
     part = spark.read.parquet(part_path)
     n_rows = part.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
+    n_files = file_count(n_rows)
     # partition-column-free files, exactly like the partitioned layout
     part.coalesce(n_files).write.mode("overwrite").parquet(tmp_path)
     if spark.read.parquet(tmp_path).count() != n_rows:
